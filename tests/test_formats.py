@@ -105,13 +105,15 @@ def test_zstd_column_path_and_cross_validation(spark):
     payload = b"some zstd payload " * 300
     comp = bytes(Z.compress(payload, 3))
     df = spark.createDataFrame(
-        [(1, bytearray(comp)), (2, bytearray(b"\x00gar\xffbage"))],
-        ["i", "c"],
+        [(1, bytearray(comp)), (2, bytearray(b"\x00gar\xffbage")),
+         (3, None)],
+        "i int, c binary",
     )
     got = {r["i"]: r["p"] for r in df.select(
         "i", FM.decode_zstd(F.col("c")).alias("p")).collect()}
     assert bytes(got[1]) == payload
     assert got[2] is None
+    assert got[3] is None  # NULL in -> NULL out
     enc = spark.createDataFrame([(bytearray(payload),)], ["t"])
     mine = bytes(enc.select(
         FM.encode_zstd(F.col("t"), 3).alias("c")).collect()[0]["c"])
@@ -373,37 +375,3 @@ def test_zstd_truncated_rle_literals_raise_not_crash():
     frame_raw = frame[:-1] + b"\x18"
     with pytest.raises(ZstdError):
         zstd_decompress(frame_raw)
-
-
-def test_zstd_jvm_engine_parity(spark):
-    """engine="jvm" (zstd-jni via the captured driver gateway) is
-    semantically identical to the pure-Python engine: both round-trip,
-    each engine's frames decode under the OTHER engine, and malformed
-    input still routes to NULL."""
-    payload = "jvm-lowered zstd lane " * 50
-    df = spark.range(4).select(
-        "id",
-        F.when(F.col("id") < 3, F.lit(payload)).otherwise(F.lit(None))
-        .cast("string").alias("t"),
-    )
-    got = df.select(
-        "id",
-        FM.decode_zstd(FM.encode_zstd(F.col("t"), engine="jvm"),
-                       engine="jvm").cast("string").alias("jj"),
-        FM.decode_zstd(FM.encode_zstd(F.col("t"), engine="jvm"))
-        .cast("string").alias("jp"),
-        FM.decode_zstd(FM.encode_zstd(F.col("t")), engine="jvm")
-        .cast("string").alias("pj"),
-    ).orderBy("id").collect()
-    for r in got[:3]:
-        assert r["jj"] == r["jp"] == r["pj"] == payload
-    assert got[3]["jj"] is None and got[3]["pj"] is None
-    # malformed frame -> NULL on the jvm lane too (falls through both)
-    bad = spark.sql("SELECT X'28b52ffd00ff' AS c")
-    assert bad.select(
-        FM.decode_zstd(F.col("c"), engine="jvm").alias("p")
-    ).collect()[0]["p"] is None
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown zstd engine"):
-        FM.encode_zstd(F.col("c"), engine="rust")

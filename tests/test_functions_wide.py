@@ -295,7 +295,9 @@ def test_parse_key_value_grouped_duplicates(spark):
 
     line = 'at=info,method=GET,path="/index",status=200,tags=dev,tags=dummy'
     df = spark.createDataFrame([(line,), ("flag standalone=1 flag",),
-                                ("k v=2 k=real k",)], ["t"])
+                                ("k v=2 k=real k",),
+                                ('at=info method=GET path="/x y" status=200',),
+                                (r'msg="say \"hi\"" n=1',)], ["t"])
     rows = df.select(
         parse_key_value_grouped(F.col("t"), "=", ",").alias("m1"),
         parse_key_value_grouped(F.col("t"), "=", " ").alias("m2"),
@@ -310,3 +312,7 @@ def test_parse_key_value_grouped_duplicates(spark):
     m = rows[2]["m2"]
     assert m["k"] == ["real"]          # value replaces bare-key true; later bare ignored
     assert m["v"] == ["2"]
+    # quoted value keeps its inner field delimiter
+    assert rows[3]["m2"] == {"at": ["info"], "method": ["GET"],
+                             "path": ["/x y"], "status": ["200"]}
+    assert rows[4]["m2"] == {"msg": ['say "hi"'], "n": ["1"]}  # \" unescapes

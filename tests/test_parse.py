@@ -26,14 +26,13 @@ def col_of(spark, values):
 GROK = "%{TIMESTAMP_ISO8601:timestamp} %{LOGLEVEL:level} %{GREEDYDATA:message}"
 
 
-@pytest.mark.parametrize("mode", ["native", "vectorized"])
-def test_parse_grok_both_lowerings(spark, mode):
+def test_parse_grok(spark):
     df = col_of(spark, [
         "2020-10-02T23:22:12.223222Z info Hello world",
         "an ungrokkable message",
         None,
     ])
-    out = df.select(P.parse_grok(F.col("s"), GROK, mode=mode).alias("o")).collect()
+    out = df.select(P.parse_grok(F.col("s"), GROK).alias("o")).collect()
     ok = out[0]["o"]
     assert ok["timestamp"] == "2020-10-02T23:22:12.223222Z"
     assert ok["level"] == "info"
@@ -42,13 +41,20 @@ def test_parse_grok_both_lowerings(spark, mode):
     assert out[2]["o"] is None
 
 
-def test_parse_regex_native_group_semantics(spark):
+def test_parse_regex_group_semantics(spark):
     # parse_regex.rs: named captures, first match
     c = compile_grok("%{IPV4:ip}:%{POSINT:port}")
-    df = col_of(spark, ["conn from 10.0.0.1:8080 ok", "no address here"])
-    out = df.select(P.parse_regex_native(F.col("s"), c).alias("o")).collect()
+    df = col_of(spark, [
+        "conn from 10.0.0.1:8080 ok",
+        "no address here",
+        "a 1.2.3.4:80 then 5.6.7.8:90",
+    ])
+    out = df.select(
+        P.parse_regex_onepass(F.col("s"), c, anchored=False).alias("o")
+    ).collect()
     assert out[0]["o"].asDict() == {"ip": "10.0.0.1", "port": "8080"}
     assert out[1]["o"] is None
+    assert out[2]["o"].asDict() == {"ip": "1.2.3.4", "port": "80"}
 
 
 # --- parse_key_value -------------------------------------------------
@@ -59,16 +65,17 @@ def test_parse_key_value_simple(spark):
 
 
 def test_parse_key_value_vectorized_full(spark):
+    # the Arrow-batched full-semantics lowering (quoting, standalone keys)
     df = col_of(spark, [
         'at=info method=GET path="/x y" status=200',
         "standalone key=v",
         None,
     ])
-    out = df.select(P.parse_key_value_vectorized(F.col("s")).alias("m")).collect()
+    out = df.select(P.parse_key_value_grouped(F.col("s")).alias("m")).collect()
     assert out[0]["m"] == {
-        "at": "info", "method": "GET", "path": "/x y", "status": "200"}
+        "at": ["info"], "method": ["GET"], "path": ["/x y"], "status": ["200"]}
     # standalone key -> "true" (parse_key_value.rs:75-80)
-    assert out[1]["m"] == {"standalone": "true", "key": "v"}
+    assert out[1]["m"] == {"standalone": ["true"], "key": ["v"]}
     assert out[2]["m"] is None
 
 

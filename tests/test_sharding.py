@@ -41,7 +41,7 @@ def _sequential_reference(rows, budget):
     return expect
 
 
-@pytest.mark.parametrize("hash", ["xxh64", "md5"])
+@pytest.mark.parametrize("hash", ["xxh", "md5"])
 def test_shard_assign_matches_sequential_scan(spark, hash):
     out = sharding.shard_assign(
         _mkdocs(spark), budget=1000, seed="s1", hash=hash, n_buckets=8

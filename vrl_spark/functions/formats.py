@@ -323,121 +323,35 @@ def decode_lz4(
 # / encode_all). The decoder handles the full format (validated
 # against real zstd-jni frames in tests); the encoder really
 # compresses (Huffman literals + predefined-FSE sequences, round-
-# tripped through real zstd in tests) — compression_level tunes the
-# match-finder, see zstdcodec docstring.
+# tripped through real zstd in tests). The encoder has one strategy;
+# compression_level is accepted for API parity, see zstdcodec.
 
 
-# engine="jvm": lower the per-row codec onto zstd-jni (already on
-# every Spark classpath — it backs Spark's own shuffle/parquet zstd).
-# Python workers have no py4j gateway of their own, so the wrapper
-# captures the DRIVER gateway's (port, auth_token) at plan-build time
-# and the worker dials back into that JVM per process (cached).
-# MEASURED (sf0.1, local[32], vrl_hashes_encode): jvm 18.2 s vs
-# python 3.6 s — per-row py4j round-trips (~1 ms RTT each, byte[]
-# base64-framed on py4j's text protocol) dominate, so the pure-Python
-# kernels stay the DEFAULT and the jvm lane exists as the
-# semantics-parity prototype of the real production lowering: a
-# 20-line Scala UDF jar over the same zstd-jni calls (zero py4j),
-# which this flag's call shape mirrors exactly. On a multi-node
-# cluster the driver gateway binds localhost, so remote workers can't
-# reach it: every JVM failure (connect refused, decode error) falls
-# back to the pure-Python kernel row-by-row, keeping semantics
-# identical.
-
-_JVM_GATEWAYS: dict = {}  # (port, token) -> JavaGateway, per worker
-
-
-def _jvm_gateway_info():
-    """Driver-side: (port, auth_token) of the live py4j gateway."""
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    if sess is None:
-        raise RuntimeError("engine='jvm' needs an active SparkSession")
-    gp = sess.sparkContext._gateway.gateway_parameters
-    return gp.port, gp.auth_token
-
-
-def _jvm_zstd(info):
-    """Worker-side: cached Zstd class handle via a dial-back gateway."""
-    gw = _JVM_GATEWAYS.get(info)
-    if gw is None:
-        from py4j.java_gateway import GatewayParameters, JavaGateway
-
-        gw = JavaGateway(gateway_parameters=GatewayParameters(
-            port=info[0], auth_token=info[1], auto_convert=False))
-        _JVM_GATEWAYS[info] = gw
-    return gw.jvm.com.github.luben.zstd.Zstd
-
-
-def encode_zstd(
-    col: Column, compression_level: int = 0, engine: str = "python"
-) -> Column:
+def encode_zstd(col: Column, compression_level: int = 0) -> Column:
     from vrl_spark.functions.zstdcodec import zstd_compress
-
-    if engine not in ("python", "jvm"):
-        raise ValueError(f"unknown zstd engine {engine!r}")
-    info = _jvm_gateway_info() if engine == "jvm" else None
-    # compression_level=0 means "engine default" on BOTH lanes (libzstd
-    # convention; ZSTD_CLEVEL_DEFAULT = 3, the reference's default too).
-    # Map it explicitly — a truthiness `or` here once made an explicit
-    # level-0 request silently diverge between lanes. Negative/positive
-    # levels pass through to the jvm lane; the python lane has one
-    # strategy and accepts the level for API parity only.
-    jvm_level = 3 if compression_level == 0 else compression_level
 
     @pandas_udf(T.BinaryType())
     def _e(s: pd.Series) -> pd.Series:
         def one(v):
             if v is None:
                 return None
-            data = bytes(v)
-            if info is not None:
-                try:
-                    z = _jvm_zstd(info)
-                    return bytes(z.compress(data, jvm_level))
-                except Exception:
-                    pass  # unreachable gateway / jni error: python path
-            return zstd_compress(data, compression_level)
+            return zstd_compress(bytes(v), compression_level)
 
         return s.map(one)
 
     return _e(col.cast("binary"))
 
 
-def decode_zstd(col: Column, engine: str = "python") -> Column:
+def decode_zstd(col: Column) -> Column:
     from vrl_spark.functions.zstdcodec import zstd_decompress
-
-    if engine not in ("python", "jvm"):
-        raise ValueError(f"unknown zstd engine {engine!r}")
-    info = _jvm_gateway_info() if engine == "jvm" else None
 
     @pandas_udf(T.BinaryType())
     def _d(s: pd.Series) -> pd.Series:
         def one(v):
             if v is None:
                 return None
-            data = bytes(v)
-            if info is not None:
-                try:
-                    z = _jvm_zstd(info)
-                    n = z.getFrameContentSize(data)
-                    # unknown/oversized content size (or multi-frame
-                    # input, which jni's one-shot can't do) -> python.
-                    # The declared size is attacker-controlled and the
-                    # JVM lane allocates it UP FRONT in the shared
-                    # gateway heap, so cap it at a plausible expansion
-                    # of the actual input (zstd RLE tops out around
-                    # 2^17 per ~3 bytes; 2048x + a 1 MiB floor covers
-                    # real corpora) — anything larger goes through the
-                    # python kernel, which allocates as it decodes.
-                    cap = min((1 << 31) - 1, max(1 << 20, len(data) * 2048))
-                    if 0 <= n <= cap:
-                        return bytes(z.decompress(data, int(n)))
-                except Exception:
-                    pass
             try:
-                return zstd_decompress(data)
+                return zstd_decompress(bytes(v))
             except Exception:
                 # Malformed frames must route to the NULL error branch,
                 # never crash the task: the decoder raises ZstdError

@@ -1,14 +1,12 @@
 """Parse functions — the heart of the north star.
 
-Two lowerings per extraction function, chosen by the pipeline builder:
-
-- ``native``      one JVM ``regexp_extract`` per field. Zero Python on
-  the hot path, fully inside whole-stage codegen. Best when the field
-  count is small (Catalyst does not CSE the repeated regex match, so
-  cost is fields x match).
-- ``vectorized``  one Arrow-batched pandas UDF emitting a struct of
-  all captures via ``pd.Series.str.extract`` — a single regex pass
-  per row regardless of field count, C-speed inside pandas.
+One lowering per extraction function. Regex/grok extraction runs as
+ONE JVM ``regexp_replace`` pass per row (the sentinel-rewrite trick
+in ``parse_regex_onepass`` / ``onepass_stage``), fully inside
+whole-stage codegen with no Python on the hot path. Key-value parsing
+has a JVM ``str_to_map`` fast path for the unquoted, single-valued
+case and an Arrow-batched lowering with the reference's full
+quoted-value and duplicate-key semantics.
 
 Reference semantics:
 - parse_regex: first match -> object of named captures, all values
@@ -23,8 +21,6 @@ Reference semantics:
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,51 +32,6 @@ from vrl_spark.grok import CompiledGrok, compile_grok
 # ---------------------------------------------------------------------
 # parse_regex / parse_grok
 # ---------------------------------------------------------------------
-
-
-def parse_regex_native(col: Column, compiled: CompiledGrok) -> Column:
-    """Struct of string captures via JVM regexp_extract per field.
-
-    Spark's regexp_extract returns '' both for "no match" and for
-    "matched but group empty"; VRL distinguishes no-match (= error).
-    We gate on an rlike match flag so no-match yields a NULL struct
-    (the error branch), matching parse_regex.rs no-match semantics.
-    """
-    matched = col.rlike(compiled.regex)
-    fields = [
-        F.regexp_extract(col, compiled.regex, compiled.group_index(name)).alias(name)
-        for name in compiled.fields
-    ]
-    return F.when(matched, F.struct(*fields))
-
-
-def parse_regex_vectorized(col: Column, compiled: CompiledGrok) -> Column:
-    """Struct of string captures via ONE Arrow-batched pandas UDF.
-
-    The compiled regex string is captured in the closure (compiled
-    driver-side once — mirroring VRL's compile-time pattern
-    compilation), recompiled once per executor, then applied with
-    pandas' vectorized ``str.extract``. No-match rows -> NULL struct.
-    """
-    regex = compiled.regex
-    names = list(compiled.fields)
-    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
-
-    @pandas_udf(schema)
-    def extract(s: pd.Series) -> pd.DataFrame:
-        import re as _re
-
-        pat = _re.compile(regex)
-        df = s.str.extract(pat, expand=True)
-        df.columns = names[: len(df.columns)]
-        # str.extract gives NaN per group on no-match; VRL's error is
-        # whole-object — null out entire rows where nothing matched.
-        return df
-
-    out = extract(col)
-    # whole-struct null when no field matched (no-match = error)
-    any_hit = F.coalesce(*[out.getField(n) for n in names]).isNotNull() if names else F.lit(False)
-    return F.when(any_hit, out)
 
 
 _SENTINEL = "\x02"
@@ -218,15 +169,10 @@ def onepass_stage(
     return df.withColumn(out, struct).drop("_op_marked", "_op_parts")
 
 
-def parse_grok(col: Column, pattern: str, mode: str = "onepass") -> Column:
-    """Compile grok -> regex on the driver, lower per ``mode``
-    (onepass | native | vectorized)."""
-    compiled = compile_grok(pattern)
-    if mode == "native":
-        return parse_regex_native(col, compiled)
-    if mode == "onepass":
-        return parse_regex_onepass(col, compiled, anchored=False)
-    return parse_regex_vectorized(col, compiled)
+def parse_grok(col: Column, pattern: str) -> Column:
+    """Compile grok -> regex on the driver; search-anywhere one-pass
+    lowering. No match -> NULL struct (the error branch)."""
+    return parse_regex_onepass(col, compile_grok(pattern), anchored=False)
 
 
 def parse_groks_stage(
@@ -304,8 +250,8 @@ def parse_key_value_native(
     """Simple-case logfmt -> MapType via JVM ``str_to_map``.
 
     Handles the unquoted fast path (the overwhelming majority of real
-    logfmt). Quoted values / duplicate-key arrays use the pandas
-    lowering below.
+    logfmt). Quoted values / duplicate-key arrays use
+    ``parse_key_value_grouped``.
     """
     import re as _re
 
@@ -314,59 +260,6 @@ def parse_key_value_native(
         F.lit(_re.escape(field_delimiter) + "+"),
         F.lit(_re.escape(key_value_delimiter)),
     )
-
-
-def parse_key_value_vectorized(
-    col: Column,
-    key_value_delimiter: str = "=",
-    field_delimiter: str = " ",
-) -> Column:
-    """Full logfmt semantics (quoted values w/ escapes, standalone key
-    -> "true") as one Arrow-batched UDF -> MapType.
-
-    Reference: src/stdlib/parse_key_value.rs:52-98 (nom parser).
-    Duplicate keys build an ARRAY there; this scalar-map lane keeps
-    the LAST value (MapType is single-valued) — use
-    ``parse_key_value_grouped`` for the exact array-building
-    duplicate-key semantics.
-    """
-    kvd, fd = key_value_delimiter, field_delimiter
-
-    @pandas_udf(T.MapType(T.StringType(), T.StringType()))
-    def kv(s: pd.Series) -> pd.Series:
-        import re as _re
-
-        # token = quoted string | bare word, around the kv delimiter.
-        # NB no whitespace-skip after the delimiter: `k= v` is an
-        # EMPTY value then the next token (logfmt semantics) — a \s*
-        # there would swallow the following key as the value.
-        tok = _re.compile(
-            r'\s*([^'
-            + _re.escape(kvd)
-            + _re.escape(fd)
-            + r'"]+)\s*(?:'
-            + _re.escape(kvd)
-            + r'("(?:[^"\\]|\\.)*"|[^'
-            + _re.escape(fd)
-            + r']*))?'
-        )
-
-        def one(line):
-            if line is None:
-                return None
-            out = {}
-            for m in tok.finditer(line):
-                k, v = m.group(1), m.group(2)
-                if v is None:
-                    v = "true"  # standalone key (parse_key_value.rs:75-80)
-                elif len(v) >= 2 and v[0] == '"' and v[-1] == '"':
-                    v = v[1:-1].replace('\\"', '"').replace("\\\\", "\\")
-                out[k] = v
-            return out
-
-        return s.map(one)
-
-    return kv(col)
 
 
 def parse_key_value_grouped(

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vrl_spark import hashing as H
+
 _WORD_BITS = 32
 
 
@@ -45,27 +47,9 @@ def bloom_positions(
         raise ValueError("k must be >= 1")
     if n_bits < _WORD_BITS:
         raise ValueError("n_bits must be >= 32")
-    if engine == "xxh":
-        cols = [
-            F.pmod(F.xxhash64(F.lit(i), key), F.lit(n_bits)) for i in range(k)
-        ]
-    elif engine == "md5":
-        cols = [
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{i}|"), key.cast("string"))),
-                        1, 15,
-                    ),
-                    16, 10,
-                ).cast("long"),
-                F.lit(n_bits),
-            )
-            for i in range(k)
-        ]
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
-    return F.array(*cols)
+    return F.array(*[
+        F.pmod(H.hash64(engine, key, i), F.lit(n_bits)) for i in range(k)
+    ])
 
 
 def bloom_build(

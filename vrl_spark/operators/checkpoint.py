@@ -31,11 +31,13 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vrl_spark import hashing as H
 
-def lineage_fingerprint(*cols: Column, engine: str = "xxh64") -> Column:
+
+def lineage_fingerprint(*cols: Column, engine: str = "xxh") -> Column:
     """Per-row content fingerprint for the lineage manifest.
 
-    ``xxh64`` (default): ``F.xxhash64`` straight over the typed
+    ``xxh`` (default): ``F.xxhash64`` straight over the typed
     columns — JVM-native, no string casts, no concat; NULL vs ''
     stay distinct because the hash folds each value's type+null
     marker. The production engine at 100 TB.
@@ -43,15 +45,11 @@ def lineage_fingerprint(*cols: Column, engine: str = "xxh64") -> Column:
     ``md5``: conv(md5-prefix) of the NULL-safe \\x1f-joined string
     forms (coalesce to \\x00 — concat_ws silently drops NULLs).
     Portable across engines, so the DuckDB oracle pins it."""
-    if engine == "xxh64":
-        return F.xxhash64(*cols)
-    if engine != "md5":
-        raise ValueError(f"unknown fingerprint engine {engine!r}")
+    H.check_family(engine)
+    if engine == "xxh":
+        return H.xxh64(*cols)
     parts = [F.coalesce(c.cast("string"), F.lit("\x00")) for c in cols]
-    return (
-        F.conv(F.substring(F.md5(F.concat_ws("\x1f", *parts)), 1, 15), 16, 10)
-        .cast("long")
-    )
+    return H.md5_prefix60(F.concat_ws("\x1f", *parts))
 
 
 # largest prime below 2^63: the modulus of the multiset fingerprint
@@ -107,7 +105,7 @@ def lineage_metrics(
     keys: list[str | Column],
     payload: Column,
     fp_cols: list[Column],
-    engine: str = "xxh64",
+    engine: str = "xxh",
 ) -> DataFrame:
     """Per-partition lineage manifest row (north_rule: "per-partition
     lineage + metrics"): row count, payload bytes, and an
@@ -154,7 +152,7 @@ class CheckpointedRun:
         self, spark: SparkSession, df: DataFrame, key,
         payload_col: str | None = None,
         fp_cols: list[str] | None = None,
-        fp_engine: str = "xxh64",
+        fp_engine: str = "xxh",
     ) -> dict:
         """Process one partition idempotently: overwrite its data dir,
         then commit the manifest row with lineage metrics.
@@ -200,7 +198,7 @@ class CheckpointedRun:
         self, spark: SparkSession, df: DataFrame, all_keys: list,
         payload_col: str | None = None,
         fp_cols: list[str] | None = None,
-        fp_engine: str = "xxh64",
+        fp_engine: str = "xxh",
     ) -> dict:
         """Process all pending partitions; returns run summary."""
         todo = self.pending(all_keys, spark)
@@ -220,7 +218,7 @@ class CheckpointedRun:
         self, spark: SparkSession,
         payload_col: str | None = None,
         fp_cols: list[str] | None = None,
-        fp_engine: str = "xxh64",
+        fp_engine: str = "xxh",
     ) -> list[dict]:
         """Re-certify every committed partition: recompute the lineage
         metrics from the data directories as they exist NOW and diff

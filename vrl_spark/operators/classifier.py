@@ -39,29 +39,18 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vrl_spark import hashing as H
 from vrl_spark.functions.parse import bind
 
 
 def _bucket(g: Column, num_buckets: int, engine: str, seed: str | None) -> Column:
     """Hash a gram string to a bucket id in [0, num_buckets)."""
+    H.check_family(engine, seed)
     if engine == "md5":
-        if seed is not None:
-            # the md5 lane's hash is oracle-pinned (no seed slot in
-            # the DuckDB replica below); silently ignoring the seed
-            # would hand identical models to a caller sweeping seeds
-            raise ValueError(
-                "engine='md5' is seedless (oracle-pinned); "
-                "use engine='xxh' for seeded feature hashing"
-            )
-        # 15 hex chars < 2^60: always positive, % is pmod.
-        # DuckDB replica: CAST(concat('0x', substr(md5(g),1,15)) AS
-        # BIGINT) % D  (lineage-fingerprint convention)
-        h = F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-        return h % num_buckets
-    if engine == "xxh":
-        return F.pmod(F.xxhash64(F.lit(seed if seed is not None else "qc"), g),
-                      F.lit(num_buckets))
-    raise ValueError(f"unknown hash engine {engine!r}")
+        # the md5 hash is non-negative, so % is pmod
+        return H.md5_prefix60(g) % num_buckets
+    return F.pmod(H.xxh64(g, seed="qc" if seed is None else seed),
+                  F.lit(num_buckets))
 
 
 def _grams(text: Column) -> Column:
@@ -85,30 +74,19 @@ def _grams(text: Column) -> Column:
 
 def _md5_buckets_udf(num_buckets: int):
     """Arrow-batched md5 bucket hashing over a gram array —
-    value-identical to the JVM expression lane
-    (``conv(substring(md5(g), 1, 15), 16, 10) % D``: the first 15 hex
-    chars are the digest's first 60 bits, i.e. bytes[0:8] as a
-    big-endian int shifted right 4). The interpreted per-gram
+    value-identical to the JVM expression lane ``_bucket`` (via
+    ``hashing.md5_prefix60_batch``). The interpreted per-gram
     md5+conv transform was the dominant cost of every md5-lane
     featurize pass (guide §4.2)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def bks(grams_ser: pd.Series) -> pd.Series:
-        import hashlib
-
-        md5 = hashlib.md5
-        out = []
-        for grams in grams_ser:
-            if grams is None:
-                out.append(None)
-                continue
-            out.append([
-                (int.from_bytes(md5(g.encode("utf-8")).digest()[:8],
-                                "big") >> 4) % num_buckets
-                for g in grams
-            ])
-        return pd.Series(out)
+        return pd.Series([
+            None if grams is None
+            else [h % num_buckets for h in H.md5_prefix60_batch(grams)]
+            for grams in grams_ser
+        ])
 
     return bks
 

@@ -126,8 +126,9 @@ def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
 
 def _minhash_md5_sig_udf(num_hashes: int):
     """Arrow-batched md5 minhash signature: bit-identical to
-    :func:`minhash_signature` (pytest-pinned equivalence), ~2.3x
-    faster. The JVM fold pays interpreted HOF evaluation per
+    :func:`minhash_signature` (pinned by
+    ``tests/test_kernels.py::test_minhash_md5_batched_matches_fold``),
+    ~2.3x faster. The JVM fold pays interpreted HOF evaluation per
     (shingle x hash) — a 16-wide string zip_with per shingle; here the
     whole batch flattens once, each shingle pays ``ceil(K/4)`` native
     hashlib md5 calls, the 32-bit hex pieces become uint32s, and the

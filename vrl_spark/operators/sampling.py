@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vrl_spark import hashing as H
+
 
 def hash_split(
     col: Column, weights: dict[str, float], salt: str = "split"
@@ -175,10 +177,7 @@ def hash_frac(col: Column, salt: str, offset: float = 0.0) -> Column:
     divide, giving the strictly-interior (0,1) uniform dsir's Gumbel
     transform needs (neither log can hit 0 or -inf). The default 0.0
     keeps the oracle-pinned [0,1) expression byte-identical."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt + "|"), col.cast("string"))), 1, 8),
-        16, 10,
-    ).cast("double")
+    h = H.md5_hex_prefix(H.salted(col, salt), 8).cast("double")
     if offset:
         h = h + F.lit(float(offset))
     return h / F.lit(float(2**32))

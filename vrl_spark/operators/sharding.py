@@ -46,42 +46,32 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_HASHES = ("xxh64", "md5")
+from vrl_spark import hashing as H
 
 
-def permutation_key(col: Column, seed: str, hash: str = "xxh64") -> Column:
+def permutation_key(col: Column, seed: str, hash: str = "xxh") -> Column:
     """Deterministic permutation sort key for a seeded global shuffle.
 
-    ``xxh64`` (default): F.xxhash64(seed, id) — JVM-side, full signed
+    ``xxh`` (default): F.xxhash64(seed, id) — JVM-side, full signed
     64-bit range; production lane. ``md5``: first 15 hex chars of
     md5(seed|id) as a bigint in [0, 2^60) — slower, but byte-for-byte
     replicable in DuckDB/any engine (the oracle lane, same split as
     the minhash family).
     """
-    if hash == "xxh64":
-        return F.xxhash64(F.lit(seed), col)
-    if hash == "md5":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(seed + "|"), col.cast("string"))), 1, 15
-            ),
-            16, 10,
-        ).cast("long")
-    raise ValueError(f"hash must be one of {_HASHES}, got {hash!r}")
+    return H.hash64(hash, col, seed)
 
 
 def _bucket_of(perm: Column, hash: str, n_buckets: int) -> Column:
     """Range bucket from the permutation key's top bits.
 
     Arithmetic shift keeps the map monotone in the SIGNED key for
-    xxh64 (buckets run negative..positive, matching ascending sort
+    xxh (buckets run negative..positive, matching ascending sort
     order); md5 keys are 60-bit non-negative so the top bits of 60
     are used. Monotonicity is what makes bucket-then-within-bucket
     ordering equal to the global ordering.
     """
     bits = n_buckets.bit_length() - 1
-    width = 64 if hash == "xxh64" else 60
-    return F.shiftright(perm, width - bits).cast("long")
+    return F.shiftright(perm, H.BITS[hash] - bits).cast("long")
 
 
 def shard_assign(
@@ -90,7 +80,7 @@ def shard_assign(
     token_col: str = "n_tokens",
     seed: str = "shuffle",
     id_col: str = "doc_id",
-    hash: str = "xxh64",
+    hash: str = "xxh",
     n_buckets: int = 64,
     with_pos: bool = True,
 ) -> DataFrame:
@@ -112,8 +102,7 @@ def shard_assign(
         raise ValueError(f"budget must be positive, got {budget}")
     if n_buckets < 2 or n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two >= 2, got {n_buckets}")
-    if hash not in _HASHES:
-        raise ValueError(f"hash must be one of {_HASHES}, got {hash!r}")
+    H.check_family(hash)
 
     perm = permutation_key(F.col(id_col), seed, hash)
     tok = F.coalesce(F.col(token_col).cast("long"), F.lit(0))

@@ -61,7 +61,8 @@ def _pair_math_udf(with_norms: bool):
     (dot / (sqrt(ssq_a) * sqrt(ssq_b)), 0.0 on zero norms — sqrt is
     correctly rounded in both runtimes); otherwise the raw dot, for
     callers whose norms ride the rows. NULL vectors and length
-    mismatches return NULL, matching zip_with's null-padding fold.
+    mismatches return NULL, matching zip_with's null-padding fold;
+    NaN/Inf components score NaN, as they do in the fold.
     Rounding stays in the JVM on top of the returned double."""
     from pyspark.sql.functions import pandas_udf
 
@@ -101,17 +102,19 @@ def _pair_math_udf(with_norms: bool):
                         na += A[:, j] * A[:, j]
                         nb += B[:, j] * B[:, j]
                     den = np.sqrt(na) * np.sqrt(nb)
+                    # Spark orders NaN above every number, so the JVM
+                    # guard `den > 0` passes a NaN norm through
                     with np.errstate(divide="ignore", invalid="ignore"):
-                        out[sub] = np.where(den > 0, dot / den, 0.0)
+                        out[sub] = np.where(
+                            (den > 0) | np.isnan(den), dot / den, 0.0)
                 else:
                     for j in range(d):
                         dot += A[:, j] * B[:, j]
                     out[sub] = dot
-        # nullable Float64 so masked slots arrive as SQL NULL (a bare
-        # float NaN would cross Arrow as NaN, not NULL)
-        res = pd.array(out, dtype="Float64")
-        res[~ok] = pd.NA
-        return pd.Series(res)
+        # nullable Float64 with an explicit mask: masked slots arrive
+        # as SQL NULL, while a computed NaN (NaN/Inf components) stays
+        # NaN as in the JVM fold
+        return pd.Series(pd.arrays.FloatingArray(out, mask=~ok))
 
     # pure, but marked non-deterministic so threshold filters cannot
     # duplicate the Arrow eval below themselves (guide §4.4)

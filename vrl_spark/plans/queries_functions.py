@@ -287,14 +287,6 @@ def vrl_strings_collections(spark, sf_dir):
 # both-directions kernel bug cannot round-trip green past these.
 _LZ_PLAINTEXT = "vrl-spark codec oracle vector " * 4
 
-# Round-trip lanes may ride the zstd-jni lowering (engine="jvm" —
-# identical semantics; measured SLOWER in local mode, py4j per-row
-# RTT dominates — see functions/formats.py); the FROZEN zstd_hex
-# literal always uses the deterministic pure-Python encoder, since
-# different compressors emit different (all-valid) bytes.
-import os as _os
-
-_ZSTD_ENGINE = _os.environ.get("VRL_SPARK_ZSTD_ENGINE", "python")
 _LZ_VECTORS = {
     "snappy_hex": "787476726C2D737061726B20636F646563206F7261636C6520766563746F7220FE1E00661E00",
     "lz4_hex": "78000000FF0F76726C2D737061726B20636F646563206F7261636C6520766563746F72201E00425063746F7220",
@@ -346,8 +338,7 @@ def vrl_hashes_encode(spark, sf_dir):
         .alias("snappy_roundtrip"),
         FM.decode_lz4(FM.encode_lz4(t), prepended_size=True)
         .cast("string").alias("lz4_roundtrip"),
-        FM.decode_zstd(FM.encode_zstd(t, engine=_ZSTD_ENGINE),
-                       engine=_ZSTD_ENGINE).cast("string")
+        FM.decode_zstd(FM.encode_zstd(t)).cast("string")
         .alias("zstd_roundtrip"),
     ).crossJoin(
         F.broadcast(
